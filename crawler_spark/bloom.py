@@ -6,9 +6,10 @@ with a *partitioned* bloom filter:
 
 - keys are hash-partitioned by ``h1(url) % P``; each partition owns an
   independent m-bit array,
-- the per-superstep build runs distributed (``applyInPandas`` after a
-  shuffle on the bloom partition id — the same co-partitioning the
-  frontier uses), the driver only ORs the per-partition bitmaps,
+- a superstep's delta is added driver-side when small; a large one is
+  built distributed (``applyInPandas`` after a shuffle on the bloom
+  partition id — the same co-partitioning the frontier uses), and the
+  driver only ORs the per-partition bitmaps,
 - probing broadcasts the bitmaps and runs as an Arrow-batched pandas UDF.
 
 Bloom contract: NO false negatives (property-tested) — a "not seen"
@@ -20,8 +21,13 @@ big to broadcast whole. ``probe_partitioned`` implements the scale
 path: candidates are co-partitioned by bloom pid and each task lazily
 loads ONLY the bitmap files for the pids it holds
 (ship-addressed-partitions-only); no task ever sees the whole
-structure. The broadcast probe remains the small-structure fast path
-(the engine switches on bitmap size — EngineConfig.bloom_probe).
+structure. The broadcast probe remains the small-structure fast path;
+:meth:`PartitionedBloom.probe` picks between the two on bitmap size.
+
+Every bit position comes from one MD5 double hash, written twice: the
+per-key :meth:`PartitionedBloom._positions` (the reference the tests
+compare against) and the vectorized :func:`_hash_positions` that every
+bulk build and probe path calls.
 """
 
 from __future__ import annotations
@@ -35,9 +41,39 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
+# deltas up to this many urls are collected and added driver-side: one
+# job and no shuffle, against the applyInPandas build's shuffle and
+# per-group Python workers
+_COLLECT_MAX = 100_000
+
+
 def _h(url: str) -> tuple[int, int]:
     d = hashlib.md5(url.encode("utf-8")).digest()
     return int.from_bytes(d[:8], "big"), int.from_bytes(d[8:16], "big")
+
+
+def _hash_positions(
+    urls: Iterable[str], P: int, m: int, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized :meth:`PartitionedBloom._positions` over many urls:
+    ``(pids[n], idx[n, k])``, the same uint64 arithmetic per url. One
+    md5 per url, then numpy — the per-url numpy path costs ~30 µs/url,
+    which at 10^5-url superstep deltas was seconds of driver time."""
+    h = (
+        np.frombuffer(
+            b"".join(hashlib.md5(u.encode("utf-8")).digest() for u in urls),
+            dtype=">u8",
+        )
+        .reshape(-1, 2)
+        .astype(np.uint64)
+    )
+    h1, h2 = h[:, 0], h[:, 1]
+    pids = (h1 % np.uint64(P)).astype(np.int64)
+    idx = (
+        (h1 // np.uint64(P))[:, None]
+        + np.arange(k, dtype=np.uint64)[None, :] * (h2 % np.uint64(m))[:, None]
+    ) % np.uint64(m)
+    return pids, idx.astype(np.int64)
 
 
 class PartitionedBloom:
@@ -62,33 +98,11 @@ class PartitionedBloom:
         np.bitwise_or.at(self.bits[pid], idx // 8, (1 << (idx % 8)).astype(np.uint8))
 
     def add_many(self, urls: Iterable[str]) -> None:
-        """Vectorized bulk insert (same positions as :meth:`add`): one
-        md5 pass, then batched numpy bit-sets per partition — the
-        per-url numpy path costs ~30 µs/url, which at 10^5-url
-        superstep deltas was seconds of driver-side constant."""
-        urls = urls if isinstance(urls, list) else list(urls)
-        if not urls:
-            return
-        n, P, m, k = len(urls), self.P, self.m, self.k
-        h1s = np.empty(n, dtype=np.uint64)
-        h2s = np.empty(n, dtype=np.uint64)
-        for i, u in enumerate(urls):
-            d = hashlib.md5(u.encode("utf-8")).digest()
-            h1s[i] = int.from_bytes(d[:8], "big")
-            h2s[i] = int.from_bytes(d[8:16], "big")
-        pids = (h1s % np.uint64(P)).astype(np.int64)
-        idx = (
-            (h1s // np.uint64(P))[:, None]
-            + np.arange(k, dtype=np.uint64)[None, :] * (h2s % np.uint64(m))[:, None]
-        ) % np.uint64(m)
-        idx = idx.astype(np.int64)
-        bytepos = idx // 8
-        bitval = (1 << (idx % 8)).astype(np.uint8)
-        for pid in np.unique(pids):
-            sel = pids == pid
-            np.bitwise_or.at(
-                self.bits[pid], bytepos[sel].ravel(), bitval[sel].ravel()
-            )
+        """Vectorized bulk insert (same positions as :meth:`add`)."""
+        pids, idx = _hash_positions(urls, self.P, self.m, self.k)
+        np.bitwise_or.at(
+            self.bits, (pids[:, None], idx // 8), (1 << (idx % 8)).astype(np.uint8)
+        )
 
     def contains(self, url: str) -> bool:
         pid, idx = self._positions(url)
@@ -126,17 +140,9 @@ class PartitionedBloom:
 
         def build(pdf: pd.DataFrame) -> pd.DataFrame:
             bits = np.zeros(m // 8, dtype=np.uint8)
+            _, idx = _hash_positions(pdf["url"], P, m, k)
+            np.bitwise_or.at(bits, idx // 8, (1 << (idx % 8)).astype(np.uint8))
             pid = int(pdf["pid"].iloc[0])
-            for u in pdf["url"]:
-                d = hashlib.md5(u.encode("utf-8")).digest()
-                h1 = int.from_bytes(d[:8], "big")
-                h2 = int.from_bytes(d[8:16], "big")
-                idx = (
-                    h1 // P
-                    + np.arange(k, dtype=np.uint64) * np.uint64(h2 % m)
-                ) % np.uint64(m)
-                idx = idx.astype(np.int64)
-                np.bitwise_or.at(bits, idx // 8, (1 << (idx % 8)).astype(np.uint8))
             return pd.DataFrame({"pid": [pid], "bits": [bits.tobytes()]})
 
         bloom_pid = bloom_pid_udf(P)
@@ -153,27 +159,29 @@ class PartitionedBloom:
         for pid, raw in deltas:
             self.bits[pid] |= np.frombuffer(raw, dtype=np.uint8)
 
-    def add_df(
-        self,
-        df: DataFrame,
-        url_col: str = "url",
-        collect_threshold: int = 0,
-        n_rows: int | None = None,
-    ) -> None:
-        """Add a DataFrame of urls. Small deltas (≤ collect_threshold,
-        when the caller knows ``n_rows``) are collected and added
-        driver-side — cheaper than an applyInPandas shuffle; large
-        deltas use the distributed partition-wise build."""
-        if (
-            collect_threshold
-            and n_rows is not None
-            and n_rows <= collect_threshold
-        ):
-            self.add_many(
-                r[0] for r in df.select(url_col).collect()
-            )
-            return
-        self.merge_deltas(self.build_deltas(df, url_col))
+    def add_df(self, df: DataFrame, url_col: str = "url") -> None:
+        """Add a DataFrame of urls. Up to ``_COLLECT_MAX`` rows are
+        collected and added driver-side; a larger delta uses the
+        distributed partition-wise build. Both set the same bits."""
+        head = df.select(url_col).limit(_COLLECT_MAX + 1).collect()
+        if len(head) <= _COLLECT_MAX:
+            self.add_many([r[0] for r in head])
+        else:
+            self.merge_deltas(self.build_deltas(df, url_col))
+
+    def probe(
+        self, df: DataFrame, parts_dir: str, broadcast_limit_bytes: int
+    ) -> DataFrame:
+        """URL-seen prefilter over ``df.url``: ``df`` plus a ``_maybe``
+        column. Up to ``broadcast_limit_bytes`` of bitmaps ride in the
+        probe UDF closure; above it (a 10^10-key bloom is ~12 GB at 1%
+        fpp) the bitmaps are written to ``parts_dir`` and each task
+        loads only its own partitions' files (:meth:`probe_partitioned`)."""
+        if self.nbytes <= broadcast_limit_bytes:
+            maybe_seen = self.probe_udf(df.sparkSession)
+            return df.withColumn("_maybe", maybe_seen(F.col("url")))
+        self.save_parts(parts_dir)
+        return self.probe_partitioned(df, parts_dir)
 
     def probe_udf(self, spark: SparkSession):
         """Arrow-batched membership probe: url → maybe-seen boolean.
@@ -183,20 +191,10 @@ class PartitionedBloom:
         @F.pandas_udf(T.BooleanType())
         def maybe_seen(urls: pd.Series) -> pd.Series:  # pragma: no cover
             P, m, k, bits = bc.value
-            out = np.empty(len(urls), dtype=bool)
-            for i, u in enumerate(urls):
-                d = hashlib.md5(u.encode("utf-8")).digest()
-                h1 = int.from_bytes(d[:8], "big")
-                h2 = int.from_bytes(d[8:16], "big")
-                idx = (
-                    h1 // P
-                    + np.arange(k, dtype=np.uint64) * np.uint64(h2 % m)
-                ) % np.uint64(m)
-                idx = idx.astype(np.int64)
-                out[i] = bool(
-                    np.all((bits[h1 % P, idx // 8] >> (idx % 8)) & 1)
-                )
-            return pd.Series(out)
+            pids, idx = _hash_positions(urls, P, m, k)
+            return pd.Series(
+                np.all((bits[pids[:, None], idx // 8] >> (idx % 8)) & 1, axis=1)
+            )
 
         # asNondeterministic: membership IS deterministic, but the flag
         # stops Catalyst pushing the probe below the first-wins dedup
@@ -258,18 +256,14 @@ class PartitionedBloom:
                 return cache[pid]
 
             for pdf in batches:
+                pids, idx = _hash_positions(pdf[url_col], P, m, k)
                 out = np.empty(len(pdf), dtype=bool)
-                for i, u in enumerate(pdf[url_col]):
-                    d = hashlib.md5(u.encode("utf-8")).digest()
-                    h1 = int.from_bytes(d[:8], "big")
-                    h2 = int.from_bytes(d[8:16], "big")
-                    idx = (
-                        h1 // P
-                        + np.arange(k, dtype=np.uint64) * np.uint64(h2 % m)
-                    ) % np.uint64(m)
-                    idx = idx.astype(np.int64)
-                    bits = bits_for(h1 % P)
-                    out[i] = bool(np.all((bits[idx // 8] >> (idx % 8)) & 1))
+                for pid in np.unique(pids):
+                    sel = pids == pid
+                    bits = bits_for(int(pid))
+                    out[sel] = np.all(
+                        (bits[idx[sel] // 8] >> (idx[sel] % 8)) & 1, axis=1
+                    )
                 res = pdf.drop(columns=["_bpid"]).copy()
                 res["_maybe"] = out
                 if emit_loaded:
@@ -287,12 +281,8 @@ class PartitionedBloom:
 def bloom_pid_udf(P: int):
     @F.pandas_udf(T.IntegerType())
     def pid(urls: pd.Series) -> pd.Series:  # pragma: no cover - executor
-        return pd.Series(
-            [
-                int.from_bytes(hashlib.md5(u.encode("utf-8")).digest()[:8], "big") % P
-                for u in urls
-            ],
-            dtype="int32",
-        )
+        # m and k do not change the pid: ask for no positions
+        pids, _ = _hash_positions(urls, P, 1, 0)
+        return pd.Series(pids, dtype="int32")
 
     return pid

@@ -26,14 +26,13 @@ import os
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import schemas
 from .bloom import PartitionedBloom
-from .cuckoo import PartitionedCuckoo
 from .extract import (
     extract_categories,
     extract_details,
@@ -52,21 +51,13 @@ class EngineConfig:
     max_k: int = 1_000
     n_salts: int = 8
     default_crawl_delay_ms: int = 3_000
-    # URL-seen approximate-membership structure: 'bloom' (OR-mergeable
-    # bitmaps) or 'cuckoo' (deletable fingerprints — recrawl/TTL path)
-    seen_filter: str = "bloom"
-    bloom_partitions: int = 16
+    # bits per bloom partition (partition and hash counts are
+    # PartitionedBloom's defaults)
     bloom_bits: int = 1 << 17
-    bloom_hashes: int = 5
-    cuckoo_buckets: int = 1 << 13
-    # bloom probe strategy: 'broadcast' ships all bitmaps in the probe
-    # UDF (fine while the structure is MBs); 'partitioned' co-partitions
-    # candidates by bloom pid so each task loads only its own bitmap
-    # (the 10^10-key path); 'auto' switches on total bitmap size
-    bloom_probe: str = "auto"
+    # bitmaps up to this size ride in the probe UDF closure; above it
+    # each probe task loads only its own partitions' bitmap files
     bloom_broadcast_limit_bytes: int = 64 << 20
     broadcast_batch_limit: int = 2_000_000
-    canonicalize_successors: bool = True
     max_supersteps: int = 10_000
     # bench knob: treat the frontier as drained below this size (long
     # politeness tails on huge-crawl-delay hosts otherwise pad dozens of
@@ -91,9 +82,6 @@ class EngineConfig:
     # rank → recrawl loop, closed on the engine's own graph. Off by
     # default: one extra delta write per superstep.
     record_links: bool = False
-    # small per-superstep deltas are coalesced before write (file-count
-    # and task-overhead control; Iceberg compaction analog)
-    delta_write_partitions: int = 8
     # max candidate rows for the broadcast (no-shuffle-of-state) form of
     # the url-seen and img-cache anti-joins; above it the classic
     # shuffle join is the right plan (~30 MB of urls at the default)
@@ -106,7 +94,6 @@ class EngineConfig:
     # derives from crawl_log, which every superstep's anti-join scans —
     # file-count growth there is direct barrier cost)
     compact_every: int = 8
-    extra: dict = field(default_factory=dict)
 
 
 def _kind_col() -> F.Column:
@@ -178,6 +165,14 @@ class CrawlEngine:
         # order as tie-break, so None reproduces the golden order
         self.priority_df = priority_df
         self.store = StateStore(spark, state_dir, fresh=fresh)
+        # manifests from before the bloom became the only URL-seen
+        # structure name it; a cuckoo-filter crawl cannot be resumed
+        if self.store.manifest.pop("seen_filter", "bloom") != "bloom":
+            raise ValueError(
+                f"state dir {state_dir!r} holds a crawl whose URL-seen "
+                "structure is a cuckoo filter, which this engine no longer "
+                "reads — pass --fresh to restart it."
+            )
         self._seed_rows: list[tuple[int, int]] | None = None
         # Corpus layout gate: a 100 TB table arrives as thousands of
         # files — scan it per superstep and let Catalyst prune columns
@@ -313,11 +308,7 @@ class CrawlEngine:
         self.store.manifest["priority_fp"] = pfp
         if self.store.manifest["frontier"] is None:
             self._init_frontier()
-        kind = self.store.manifest.get("seen_filter", self.cfg.seen_filter)
-        loader = (
-            PartitionedCuckoo.load if kind == "cuckoo" else PartitionedBloom.load
-        )
-        self.bloom = loader(self.store.manifest["bloom"])
+        self.bloom = PartitionedBloom.load(self.store.manifest["bloom"])
         self._budget_mult = 1
 
     # ------------------------------------------------------------------
@@ -335,7 +326,6 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     def _init_frontier(self) -> None:
         """Superstep 0: seed the frontier (canonicalized, robots-gated)."""
-        cfg = self.cfg
         seeds = self.spark.read.schema(schemas.SEEDS).parquet(self.seeds_path)
         f = (
             seeds.withColumn("url", canonicalize_expr(F.col("url")))
@@ -349,13 +339,7 @@ class CrawlEngine:
         )
         f = robots_allowed(f, self.robots).select(*_FRONTIER_COLS)
         self.store.write_frontier(f, 0)
-        if cfg.seen_filter == "cuckoo":
-            bloom = PartitionedCuckoo(cfg.bloom_partitions, cfg.cuckoo_buckets)
-        else:
-            bloom = PartitionedBloom(
-                cfg.bloom_partitions, cfg.bloom_bits, cfg.bloom_hashes
-            )
-        self.store.manifest["seen_filter"] = cfg.seen_filter
+        bloom = PartitionedBloom(m_bits=self.cfg.bloom_bits)
         bloom.add_df(self.spark.read.parquet(self.store.manifest["frontier"]))
         bpath = self.store.bloom_path(0)
         bloom.save(bpath)
@@ -650,8 +634,7 @@ class CrawlEngine:
         # frontier write; errors is touched only by the agg thread):
         #  A. one tagged agg yields n_new, n_err AND the per-pid lineage
         #     counts (previously three separate actions),
-        #  B. the bloom delta build (limit-guarded driver collect for
-        #     small deltas, distributed partition build for large).
+        #  B. the bloom delta add (PartitionedBloom.add_df).
         # Sequentially these are each mostly job-scheduling latency —
         # constant per superstep — so overlapping them buys back real
         # barrier time at zero semantic cost. ----
@@ -672,11 +655,7 @@ class CrawlEngine:
 
         def _bloom_update() -> None:
             self._jd(f"s{s}:bloom_delta")
-            head = delta_urls.limit(100_001).collect()
-            if len(head) <= 100_000:
-                self.bloom.add_many([r[0] for r in head])
-            else:
-                self.bloom.merge_deltas(self.bloom.build_deltas(delta_urls))
+            self.bloom.add_df(delta_urls)
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             def _tagged_counts():
@@ -1174,19 +1153,18 @@ class CrawlEngine:
         # defaultParallelism is the full cluster width, so this never
         # caps real parallelism.)
         succ = succ.coalesce(self.spark.sparkContext.defaultParallelism)
-        if cfg.canonicalize_successors:
-            # pure-Catalyst canonicalizer (urltools.canonicalize_expr):
-            # stays inside the JVM — no Python-worker round trip in the
-            # per-superstep hot path (round-2 event logs put the pandas
-            # UDF predecessor among the largest non-extract stages).
-            # The unparseable-URL drop happens AFTER the first-wins agg
-            # below (r5 barrier profile): an IS NOT NULL filter here is
-            # pushed below the projection, inlining the entire
-            # canonicalize tree into the filter CONDITION — every
-            # successor row paid the chain twice (plan audit, exec 135
-            # stage 566). Post-agg, the filter reads the materialized
-            # grouping key; null urls just form one dropped group.
-            succ = succ.withColumn("url", canonicalize_expr(F.col("url")))
+        # pure-Catalyst canonicalizer (urltools.canonicalize_expr): stays
+        # inside the JVM — no Python-worker round trip in the
+        # per-superstep hot path (round-2 event logs put the pandas UDF
+        # predecessor among the largest non-extract stages). The
+        # unparseable-URL drop happens AFTER the first-wins agg below
+        # (r5 barrier profile): an IS NOT NULL filter here is pushed
+        # below the projection, inlining the entire canonicalize tree
+        # into the filter CONDITION — every successor row paid the chain
+        # twice (plan audit, exec 135 stage 566). Post-agg, the filter
+        # reads the materialized grouping key; null urls just form one
+        # dropped group.
+        succ = succ.withColumn("url", canonicalize_expr(F.col("url")))
         if cfg.record_links:
             # every discovered edge, canonical dst, BEFORE the
             # first-wins dedup below collapses multi-parent urls to one
@@ -1225,16 +1203,12 @@ class CrawlEngine:
             succ, self.robots, rules_col=self._robots_rules_col
         )
 
-        if os.environ.get("CRAWL_PROF_SPLIT"):
-            # profiling only (extra action; re-runs the pre-probe chain):
-            # attribute the succ materialize between the relational chain
-            # and the probe/checkpoint tail
-            tp = time.monotonic()
-            ph["nfr_pre_probe_count"] = succ.count()
-            ph["nfr_pre_probe"] = round(time.monotonic() - tp, 3)
-
         # bloom prefilter: definite-new rows skip the exact anti-join
-        succ = self._probe_maybe_seen(succ)
+        succ = self.bloom.probe(
+            succ,
+            os.path.join(self.store.root, "_bloom_parts"),
+            cfg.bloom_broadcast_limit_bytes,
+        )
         # Evaluate the union→canonicalize→dedup→probe chain exactly
         # once: without this cut, the complementary `_maybe` filters
         # below make Catalyst clone the whole subtree per branch — the
@@ -1279,37 +1253,6 @@ class CrawlEngine:
             .localCheckpoint(eager=False)
         )
         return new_rows
-
-    # ------------------------------------------------------------------
-    def _probe_maybe_seen(self, succ: DataFrame) -> DataFrame:
-        """URL-seen prefilter (adds ``_maybe``). Below the size threshold
-        the bitmaps ride in the probe UDF closure — the degenerate
-        single-node case. Above it (a 10^10-key bloom is ~12 GB at 1%
-        fpp) candidates are co-partitioned by bloom pid and each task
-        loads only its own partition's bitmap from the state dir —
-        ship-addressed-partitions-only (SURVEY.md §7.3-4, implemented)."""
-        cfg = self.cfg
-        partitioned = isinstance(self.bloom, PartitionedBloom) and (
-            cfg.bloom_probe == "partitioned"
-            or (
-                cfg.bloom_probe == "auto"
-                and self.bloom.nbytes > cfg.bloom_broadcast_limit_bytes
-            )
-        )
-        if partitioned:
-            parts_dir = os.path.join(self.store.root, "_bloom_parts")
-            t0 = time.monotonic()
-            self.bloom.save_parts(parts_dir)
-            if os.environ.get("CRAWL_PHASE_LOG"):
-                import sys as _sys
-
-                print(
-                    f"bloom.save_parts: {time.monotonic() - t0:.2f}s",
-                    file=_sys.stderr,
-                )
-            return self.bloom.probe_partitioned(succ, parts_dir)
-        probe = self.bloom.probe_udf(self.spark)
-        return succ.withColumn("_maybe", probe(F.col("url")))
 
     # ------------------------------------------------------------------
     def _write_checkpoint(self, s, frontier, fetched_c, new_c, n_err):

@@ -151,7 +151,7 @@ SEEN_OUT_SCHEMA = StructType(
 
 # per-host state: the sorted set of FULL 128-bit md5 digests of seen
 # urls, stored as interleaved (hi, lo) signed-long pairs — the streaming
-# twin of the engine's partitioned bloom/cuckoo URL-seen, but EXACT: a
+# twin of the engine's partitioned bloom URL-seen, but EXACT: a
 # false "seen" would need an md5 collision between two distinct URLs on
 # one host, which is a correctness event for md5 itself, not a sampling
 # artifact (an earlier revision kept only 63-bit prefixes, whose
@@ -194,7 +194,7 @@ def url_seen_dedup_stateful(stream: DataFrame) -> DataFrame:
 
     This is the streaming expression of the crawl loop's URL-seen
     anti-join (J4/J6): hash-partitioned by host exactly like the batch
-    bloom/cuckoo partitioning, so each state partition holds only its
+    bloom partitioning, so each state partition holds only its
     hosts' keys and the operator scales by adding partitions. Reference
     analog: BaseSpider.cs's seen-set gate, as an incremental stream.
     """

@@ -276,50 +276,40 @@ def test_engine_priority_df_fetches_high_authority_url_earlier(
     resume(pri)
 
 
-def test_cuckoo_no_false_negatives_fpp_delete(spark):
-    """Cuckoo URL-seen: zero false negatives, bounded fpp, delete
-    support, distributed build agrees with driver-side adds."""
-    from crawler_spark.cuckoo import PartitionedCuckoo
-
-    urls = [f"https://h{i % 53}.example.org/p/{i}" for i in range(20_000)]
-    c = PartitionedCuckoo(n_partitions=8, n_buckets=1 << 11)  # ~65k slots
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    c.add_df(df)
-    assert not c.overflow.any(), "table overflowed at modest load"
-    for u in urls[::37]:
-        assert c.contains(u)
-    other = [f"https://h{i % 31}.nowhere.net/q/{i}" for i in range(20_000)]
-    odf = spark.createDataFrame([(u,) for u in other], "url string")
-    probe = c.probe_udf(spark)
-    fp = odf.withColumn("m", probe("url")).filter("m").count()
-    assert fp / len(other) < 0.05, f"cuckoo fpp too high: {fp}"
-    # deletion (recrawl path) — bloom cannot do this
-    assert c.delete(urls[0])
-    assert not c.contains(urls[0])
-    # persistence round-trip
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        p = os.path.join(d, "ck.npz")
-        c.save(p)
-        c2 = PartitionedCuckoo.load(p)
-        assert (c2.table == c.table).all()
-        assert c2.contains(urls[1])
-
-
-def test_vectorized_add_many_bit_identical():
-    """The batched numpy bulk insert must set exactly the bits the
-    per-url add() sets (same double-hash positions)."""
+def test_vectorized_add_many_bit_identical(spark, tmp_path):
+    """Every bulk path must agree with the per-url reference: add_many
+    and the distributed build (both sides of add_df's size switch) set
+    exactly the bits add() sets, and both probes (both sides of probe's
+    size switch) answer exactly what contains() answers."""
     urls = [f"https://h{i % 31}.example.net/p/{i}" for i in range(5_000)]
     a = PartitionedBloom(n_partitions=8, m_bits=1 << 16, k=5)
     b = PartitionedBloom(n_partitions=8, m_bits=1 << 16, k=5)
+    c = PartitionedBloom(n_partitions=8, m_bits=1 << 16, k=5)
     for u in urls:
         a.add(u)
     b.add_many(urls)
     assert (a.bits == b.bits).all()
     b.add_many([])  # empty delta is a no-op
     assert (a.bits == b.bits).all()
+    c.merge_deltas(
+        c.build_deltas(spark.createDataFrame([(u,) for u in urls], "url string"))
+    )
+    assert (a.bits == c.bits).all()
+
+    mixed = urls[::5] + [
+        f"https://h{i % 29}.unseen.org/q/{i}" for i in range(5_000)
+    ]
+    want = {u: a.contains(u) for u in mixed}
+    assert any(want.values()) and not all(want.values())
+    df = spark.createDataFrame([(u,) for u in mixed], "url string")
+    bc = {r["url"]: r["m"] for r in
+          df.withColumn("m", a.probe_udf(spark)("url")).collect()}
+    parts_dir = str(tmp_path / "parts")
+    a.save_parts(parts_dir)
+    pp = {r["url"]: r["_maybe"] for r in
+          a.probe_partitioned(df, parts_dir).collect()}
+    assert bc == want
+    assert pp == want
 
 
 def test_partitioned_probe_equals_broadcast(spark, tmp_path):
@@ -382,7 +372,7 @@ def test_engine_crawl_with_partitioned_probe(spark, smoke_dir, smoke_corpus, tmp
         robots_path=f"{smoke_dir}/robots.parquet",
         state_dir=str(tmp_path / "pp-state"),
         config=EngineConfig(
-            budget_ms=30_000, max_k=1_000, bloom_probe="partitioned"
+            budget_ms=30_000, max_k=1_000, bloom_broadcast_limit_bytes=0
         ),
         fresh=True,
     )
@@ -434,38 +424,6 @@ def test_adaptive_budget_same_crawl_fewer_supersteps(
     # the window cannot and must not shortcut); adaptive must not need
     # more than fixed
     assert summary["supersteps"] <= 7
-
-
-def test_engine_runs_with_cuckoo_seen_filter(spark, smoke_dir, smoke_corpus, tmp_path):
-    """The full crawl with seen_filter='cuckoo' reaches the same
-    url_seen set and page count as the oracle."""
-    from crawler_spark import oracle
-    from crawler_spark.engine import CrawlEngine, EngineConfig
-    from crawler_spark.urltools import registrable_domain
-
-    golden = oracle.simulate_crawl(
-        smoke_corpus.pages,
-        smoke_corpus.seeds,
-        smoke_corpus.robots,
-        registrable_domain,
-        budget_ms=30_000,
-        max_k=1_000,
-    )
-    eng = CrawlEngine(
-        spark,
-        pages_path=f"{smoke_dir}/pages.parquet",
-        seeds_path=f"{smoke_dir}/seeds.parquet",
-        robots_path=f"{smoke_dir}/robots.parquet",
-        state_dir=str(tmp_path / "ck-state"),
-        config=EngineConfig(
-            budget_ms=30_000, max_k=1_000, seen_filter="cuckoo"
-        ),
-        fresh=True,
-    )
-    summary = eng.run(max_supersteps=200)
-    assert summary["pages_fetched"] == len(golden.crawl_order)
-    seen = {r.url for r in eng.store.read("url_seen").select("url").collect()}
-    assert seen == golden.url_seen
 
 
 def test_priority_loop_closes_on_own_link_graph(spark, smoke_dir, tmp_path):

@@ -7,7 +7,10 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
 from crawler_spark.engine import CrawlEngine, EngineConfig
+from crawler_spark.statestore import StateStore
 
 CFG = dict(budget_ms=30_000, max_k=1_000)
 
@@ -290,3 +293,16 @@ def test_priority_fp_legacy_crc_manifest_resumes(spark, smoke_dir, tmp_path):
     )
     with pytest.raises(ValueError, match="--fresh"):
         engine(other, fresh=False)
+
+
+def test_cuckoo_era_state_dir_refused(spark, smoke_dir, tmp_path):
+    """A state dir whose manifest names the removed cuckoo URL-seen
+    filter is refused up front, naming the dir and the way out — not
+    left to fail inside the bloom loader."""
+    state = str(tmp_path / "cuckoo-era")
+    store = StateStore(spark, state, fresh=True)
+    store.manifest["seen_filter"] = "cuckoo"
+    store.commit()
+    with pytest.raises(ValueError, match="--fresh") as err:
+        _mk(spark, smoke_dir, state, fresh=False)
+    assert state in str(err.value)
